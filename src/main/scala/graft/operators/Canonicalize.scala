@@ -39,16 +39,30 @@ object Canonicalize {
     * table (official_format_extractor.py:167-172).
     */
   def requireNonBlank(df: DataFrame, column: String): DataFrame =
-    df.filter(col(column).isNotNull && trim(col(column).cast("string")) =!= "")
+    df.filter(nonBlank(column))
+
+  /** P3 as a row predicate. */
+  def nonBlank(column: String): Column =
+    col(s"`$column`").isNotNull && trim(col(s"`$column`").cast("string")) =!= ""
 
   /** P4 — drop Excel footer/summary rows: any row whose concatenated
     * upper-cased cells contain NETO / IVA / TOTAL
     * (official_format_extractor.py:174-177).
     */
-  def dropSummaryRows(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val joined = upper(concat_ws(" ", columns.map(c => col(s"`$c`").cast("string")): _*))
-    df.filter(!joined.rlike("NETO|IVA|TOTAL"))
-  }
+  def dropSummaryRows(df: DataFrame, columns: Seq[String]): DataFrame =
+    df.filter(notSummaryRow(columns))
+
+  /** P4 as a row predicate. */
+  def notSummaryRow(columns: Seq[String]): Column =
+    !upper(concat_ws(" ", columns.map(c => col(s"`$c`").cast("string")): _*))
+      .rlike("NETO|IVA|TOTAL")
+
+  /** P2 as a row predicate over STRING columns: some listed cell is
+    * non-null. For strings this is exactly [[dropFullyEmpty]] (its NaN
+    * rule only touches floating-point columns).
+    */
+  def anyNonNull(columns: Seq[String]): Column =
+    coalesce(columns.map(c => col(s"`$c`")): _*).isNotNull
 
   /** P5 — take-while: keep rows strictly before the first row (by `ordinal`)
     * that satisfies `stop`, independently within each `filePartition`

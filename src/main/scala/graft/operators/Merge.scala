@@ -47,10 +47,18 @@ object Merge {
     val newRows = deduped
       .join(existing.select(pk.map(col): _*), pk, "left_anti")
       .select(cols.map(col) :+ lit(RecordStatus.New).as("status"): _*)
-    val kept = existing
-      .select(cols.map(col) :+ lit(RecordStatus.New).as("status"): _*)
-    Result(result = kept.unionByName(newRows), inserted = newRows)
+    Result(result = insertOnlyView(existing, newRows), inserted = newRows)
   }
+
+  /** J1's merged view from its inserted slice: every existing row, labelled
+    * `new` like the slice (the view contract), plus the slice. A caller
+    * that materialized the slice reads the view through it instead of
+    * re-running the dedup and the anti-join.
+    */
+  def insertOnlyView(existing: DataFrame, inserted: DataFrame): DataFrame =
+    existing.select(inserted.columns.toSeq.map(c =>
+        if (c == "status") lit(RecordStatus.New).as(c) else col(c)): _*)
+      .unionByName(inserted)
 
   /** J3 — full upsert, the documented alternate mode (ARCHITECTURE.md:591-626;
     * change machinery at entities.py:101-111): PK match with changed business

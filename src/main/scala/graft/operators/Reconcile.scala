@@ -11,9 +11,8 @@ import graft.domain.InvoiceRecord
   * smartbots-etl/src/application/use_cases/consolidate_invoices.py:550-572):
   * (a) zero data loss — every source PK appears in the merge result;
   * (b) exact-decimal amount variance between source and the semi-joined
-  * result subset must be <= 1. Sums are `DecimalType` — no float drift,
-  * and Spark's partial (map-side) aggregation makes each a single
-  * shuffle-light pass at scale.
+  * result subset must be <= 1. Sums are `DecimalType` (A1: exact, no
+  * float drift).
   */
 object Reconcile {
 
@@ -33,46 +32,39 @@ object Reconcile {
       s"Reconciliación fallida: data_loss=${report.dataLossPct}% " +
         s"variance=${report.variance}")
 
-  /** A1 — exact decimal sum of an amount column. */
-  def decimalTotal(df: DataFrame, amount: String): java.math.BigDecimal = {
-    val row = df.agg(
-      sum(col(amount).cast(InvoiceRecord.money)).as("t")).head()
-    if (row.isNullAt(0)) java.math.BigDecimal.ZERO
-    else row.getDecimal(0)
-  }
-
-  /** A2 — reconciliation check in TWO Spark jobs (source stats; one outer
-    * join covering both the missing-PK count and the matched-result
-    * total — A2 sits on the critical path before every sink commit, so
-    * jobs matter at scale). Throws [[ReconciliationException]] when the
-    * invariant fails, mirroring `ReconciliationError`
-    * (src/domain/exceptions.py:33-42).
+  /** A2 — reconciliation check in ONE Spark query (A2 sits on the
+    * critical path before every sink commit, so jobs matter at scale).
+    * Source and result rows meet in one union grouped by key — no join:
+    * each source key's group holds its source total and the total of
+    * every result row with that key (exact when either side repeats a
+    * key), and a key with no result row is missing. Result keys with a
+    * null field never match, as in an equi-join. Throws
+    * [[ReconciliationException]] when the invariant fails, mirroring
+    * `ReconciliationError` (src/domain/exceptions.py:33-42).
     */
   def check(source: DataFrame, result: DataFrame, pk: Seq[String],
       amount: String): Report = {
-    val srcStats = source.agg(
-      count_distinct(struct(pk.map(col): _*)).as("pks"),
-      sum(col(amount).cast(InvoiceRecord.money)).as("total")).head()
-    // one left-outer join from the distinct source keys: an unmatched key
-    // yields exactly one null-marker row (→ missing count); a matched key
-    // yields one row per matching result row (→ the semi-join sum)
-    val joined = source.select(pk.map(col): _*).distinct()
-      .join(result.select(pk.map(col) :+
-            col(amount).cast(InvoiceRecord.money).as("__amt"): _*)
-          .withColumn("__present", lit(1)),
-        pk, "left_outer")
-      .agg(
-        count(when(col("__present").isNull, lit(1))).as("missing"),
-        sum(col("__amt")).as("result_total")).head()
-    val report = Report(
-      missingPks = joined.getLong(0),
-      sourcePks = srcStats.getLong(0),
-      sourceTotal =
-        if (srcStats.isNullAt(1)) java.math.BigDecimal.ZERO
-        else srcStats.getDecimal(1),
-      resultTotal =
-        if (joined.isNullAt(1)) java.math.BigDecimal.ZERO
-        else joined.getDecimal(1))
+    val amt = col(amount).cast(InvoiceRecord.money)
+    val none = lit(null).cast(InvoiceRecord.money)
+    val keyed = pk.map(col(_).isNotNull).reduce(_ && _)
+    val tagged = source.select(pk.map(col) ++ Seq(amt.as("__src"),
+        none.as("__res"), lit(true).as("__in_src")): _*)
+      .unionByName(result.filter(keyed).select(pk.map(col) ++ Seq(
+        none.as("__src"), amt.as("__res"), lit(false).as("__in_src")): _*))
+    val perKey = tagged.groupBy(pk.map(col): _*).agg(
+        sum(col("__src")).as("__src"), sum(col("__res")).as("__res"),
+        max(col("__in_src")).as("__in_src"),
+        min(col("__in_src")).as("__only_src"))
+      .filter(col("__in_src"))
+    val row = perKey.agg(
+      count(lit(1)).as("pks"),
+      count(when(col("__only_src"), lit(1))).as("missing"),
+      sum(col("__src")).as("source_total"),
+      sum(col("__res")).as("result_total")).head()
+    def total(i: Int) =
+      if (row.isNullAt(i)) java.math.BigDecimal.ZERO else row.getDecimal(i)
+    val report = Report(missingPks = row.getLong(1), sourcePks = row.getLong(0),
+      sourceTotal = total(2), resultTotal = total(3))
     if (!report.ok) throw ReconciliationException(report)
     report
   }

@@ -56,8 +56,14 @@ object Validate {
     * `(source_file, row_index, error)` — the reference's side-channel shape
     * (use_cases/consolidate_invoices.py:439-473).
     */
-  def split(df: DataFrame, rowIndexCol: String = "row_index"): Split = {
-    val flagged = withErrorColumn(df)
+  def split(df: DataFrame, rowIndexCol: String = "row_index"): Split =
+    splitFlagged(withErrorColumn(df), rowIndexCol)
+
+  /** [[split]] over a frame that already carries the `error` column (e.g.
+    * one materialized once, with its counters observed, and read by both
+    * sides).
+    */
+  def splitFlagged(flagged: DataFrame, rowIndexCol: String = "row_index"): Split = {
     val errCols = Seq("source_file", rowIndexCol, "error")
       .filter(flagged.columns.contains) :+ "invoice_number"
     Split(

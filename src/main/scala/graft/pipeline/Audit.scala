@@ -91,24 +91,41 @@ object Audit {
             org.apache.spark.sql.types.StringType))))
     }
 
-    /** J4 — file-level idempotence probe: has (name, mtime) already
-      * COMPLETED? (sqlite_tracker.py:232-240: an errored file IS
-      * reprocessed.) A COMPLETED row gates the skip UNLESS a ROLLED_BACK
-      * supersession appended by [[markRolledBack]] at the same or a later
-      * started_at reverses it — only rollback undoes a completion (an
-      * unrelated ERROR attempt never hides an earlier success), and the
-      * audit tables stay append-only. Ties break toward reprocessing —
-      * the safe direction.
+    /** J4 — file-level idempotence probe for a whole landing listing in
+      * ONE query: which (name, mtime) pairs have already COMPLETED?
+      * (sqlite_tracker.py:232-240: an errored file IS reprocessed.) A
+      * COMPLETED row gates the skip UNLESS a ROLLED_BACK supersession
+      * appended by [[markRolledBack]] at the same or a later started_at
+      * reverses it — only rollback undoes a completion (an unrelated ERROR
+      * attempt never hides an earlier success), and the audit tables stay
+      * append-only. Ties break toward reprocessing — the safe direction.
+      * The query returns one row per (name, mtime, status) of the listed
+      * names; the rule runs on the driver. Timestamps compare at the
+      * microsecond precision the table stores.
       */
-    def isFileProcessed(fileName: String, modifiedTime: Timestamp): Boolean = {
-      val byTime = files.filter(col("file_name") === fileName &&
-          col("file_modified_time") === modifiedTime)
-        .groupBy(col("status")).agg(max(col("started_at")).as("at"))
-        .collect()
-        .map(r => r.getString(0) -> r.getTimestamp(1)).toMap
-      byTime.get("COMPLETED").exists(done =>
-        !byTime.get("ROLLED_BACK").exists(rb => !rb.before(done)))
-    }
+    def processedFiles(listing: Seq[(String, Timestamp)]): Set[(String, Timestamp)] =
+      if (listing.isEmpty) Set.empty
+      else {
+        val latest = files.filter(col("file_name").isin(listing.map(_._1).distinct: _*))
+          .groupBy(col("file_name"), col("file_modified_time"), col("status"))
+          .agg(max(col("started_at")))
+          .collect()
+          .groupMap(r => (r.getString(0), micros(r.getTimestamp(1))))(
+            r => r.getString(2) -> r.getTimestamp(3))
+          .view.mapValues(_.toMap).toMap
+        listing.filter { case (name, mtime) =>
+          latest.get((name, micros(mtime))).exists(byStatus =>
+            byStatus.get("COMPLETED").exists(done =>
+              !byStatus.get("ROLLED_BACK").exists(rb => !rb.before(done))))
+        }.toSet
+      }
+
+    /** [[processedFiles]] for one file. */
+    def isFileProcessed(fileName: String, modifiedTime: Timestamp): Boolean =
+      processedFiles(Seq(fileName -> modifiedTime)).nonEmpty
+
+    private def micros(t: Timestamp): Long =
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t)
 
     /** Run-level rollback supersession: for every file this run logged
       * COMPLETED, append a ROLLED_BACK row with the same (name, mtime) so

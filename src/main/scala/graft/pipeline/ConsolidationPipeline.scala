@@ -7,10 +7,11 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.domain.{InvoiceRecord, RecordAction}
+import graft.domain.{InvoiceRecord, RecordAction, RecordStatus}
 import graft.operators.{Merge, Reconcile, Validate}
 import graft.sources.{OfficialFormatExtract, StagedWorkbook}
 
@@ -18,12 +19,23 @@ import graft.sources.{OfficialFormatExtract, StagedWorkbook}
   * application/use_cases/consolidate_invoices.py:45-233) over a local
   * landing directory of staged workbooks:
   *
-  * per file: idempotence probe (J4) → extract (S3-S5, P2-P5) → validate
-  * split (P6) → lenient re-parse of the consolidated side (J5) →
-  * insert-only merge (J1, or full upsert J3) → reconcile BEFORE commit
-  * (A2) → append inserted slice (S7 semantics) → audit rows (S8/J2) →
-  * archive (S10); per-file fault isolation → PARTIAL, roll-up (A5),
-  * always-render report (S9).
+  * per run: one idempotence probe (J4) for the whole landing listing;
+  * per file: extract (S3-S5, P2-P5) → validate split (P6) → lenient
+  * re-parse of the consolidated side (J5) → insert-only merge (J1, or
+  * full upsert J3) → reconcile BEFORE commit (A2) → audit rows (S8/J2) →
+  * append inserted slice (S7 semantics) → archive (S10); per-file fault
+  * isolation → PARTIAL, roll-up (A5), always-render report (S9).
+  *
+  * Workbooks hold tens of rows, so a file's cost is Spark job dispatch,
+  * not data: the pipeline pays one plan per phase, never one per counter.
+  * The sheet head (≤ 15 rows: fixed cells, header discovery, header
+  * names) is read once — no job at all for XLSX, whose rows are already
+  * on the driver. Extraction plus the P6 flags materialize once, and the
+  * row and error counts are observed on that job; the inserted count is
+  * observed on the inserted slice's (or, in upsert mode, the merge
+  * result's) materialization, and the updated/unchanged counts on the
+  * record_log write, so every counter mirrors the audit rows. Reconcile
+  * is one query and yields the source total.
   *
   * The consolidated store is a parquet table (the Excel-with-template
   * rendering is an egress formatter, see [[Egress]]); at scale it is the
@@ -93,7 +105,7 @@ object ConsolidationPipeline {
     }
 
     val landing = Paths.get(cfg.landingDir)
-    val files: Seq[Path] =
+    val files: Seq[(Path, Timestamp)] =
       if (Files.isDirectory(landing)) {
         // close the directory stream: each leaked one holds an fd, and a
         // scheduler-hosted driver runs this every few minutes for years
@@ -101,11 +113,16 @@ object ConsolidationPipeline {
         try st.iterator().asScala
           .filter(p => Files.isRegularFile(p) &&
             (p.toString.endsWith(".csv") || p.toString.endsWith(".xlsx")))
+          .map(p => p -> new Timestamp(Files.getLastModifiedTime(p).toMillis))
           .toSeq
           // S1/O1: newest first by modification time
-          .sortBy(p => -Files.getLastModifiedTime(p).toMillis)
+          .sortBy(-_._2.getTime)
         finally st.close()
       } else Seq.empty
+    // J4 for the whole listing in one query (no file of this run can
+    // change another's answer: names are unique within the landing dir)
+    val alreadyDone =
+      tracker.processedFiles(files.map { case (p, t) => p.getFileName.toString -> t })
 
     var outcomes = Vector.empty[Report.FileOutcome]
     var allErrors = Vector.empty[String]
@@ -117,12 +134,11 @@ object ConsolidationPipeline {
 
     var skipped = 0
     var rolledBack = false
-    files.foreach { file =>
-      val mtime = new Timestamp(Files.getLastModifiedTime(file).toMillis)
+    files.foreach { case (file, mtime) =>
       val fileName = file.getFileName.toString
       if (rolledBack) {
         () // run aborted after a store rollback — remaining files untouched
-      } else if (tracker.isFileProcessed(fileName, mtime)) {
+      } else if (alreadyDone.contains(fileName -> mtime)) {
         skipped += 1 // J4: silently skip (consolidate_invoices.py:194-196)
       } else {
         val fileLogId = UUID.randomUUID().toString
@@ -246,49 +262,48 @@ object ConsolidationPipeline {
       fStart: Timestamp, path: Path): Report.FileOutcome = {
 
     // S3: stage by format — real Excel bytes via the dependency-free
-    // XLSX reader, staged CSV workbooks via the CSV reader
-    val sheet =
-      if (path.toString.endsWith(".xlsx"))
-        graft.sources.XlsxIngress.stage(spark, path.toString)
-      else StagedWorkbook.fromCsv(spark, path.toString)
-    val fc = StagedWorkbook.fixedCells(sheet)
-    val headerRow =
-      if (StagedWorkbook.isMixedFormat(fc))
-        StagedWorkbook.discoverHeaderRow(sheet, "Órdenes de Embarque",
-          OfficialFormatExtract.MixedKnownHeaders)
-      else
-        StagedWorkbook.discoverHeaderRow(sheet, "N° Factura",
-          OfficialFormatExtract.SimpleColumns.toSet)
-    val detail = StagedWorkbook.table(sheet, headerRow)
+    // XLSX reader (rows already on the driver: the head costs no job),
+    // staged CSV workbooks via the CSV reader (one ≤15-row head read)
+    val (sheet, head) =
+      if (path.toString.endsWith(".xlsx")) {
+        val rows = graft.sources.XlsxIngress.readRows(path.toString)
+        (StagedWorkbook.fromRows(spark, rows), StagedWorkbook.Head.of(rows))
+      } else {
+        val staged = StagedWorkbook.fromCsv(spark, path.toString)
+        (staged, StagedWorkbook.readHead(staged))
+      }
+    // S4/S5: fixed cells, format detect and header discovery off the head
+    val layout = OfficialFormatExtract.layout(sheet, head)
 
     // schema pre-flight (S3/SchemaValidationError)
-    val required =
-      if (StagedWorkbook.isMixedFormat(fc)) Seq("Órdenes de Embarque")
-      else Seq("N° Factura", "N° Referencia", "Transportista", "Monto Total")
     val (ok, missing, extra) =
-      StagedWorkbook.validateSchema(detail.columns.toSeq, required)
+      StagedWorkbook.validateSchema(layout.detail.columns.toSeq, layout.required)
     if (!ok) throw SchemaValidationException(missing, extra)
 
-    val extracted =
-      (if (StagedWorkbook.isMixedFormat(fc))
-        OfficialFormatExtract.mixedFormat(detail, fc, cfg.dateFormat)
-      else OfficialFormatExtract.simpleTabular(detail, cfg.dateFormat))
+    // extraction + P6 flags materialize ONCE (small per-file batch; both
+    // split sides and every later action read this copy), and the row
+    // and error counters ride that same job as observed metrics. Every
+    // Observation.get below waits for its job, so the checkpoints that
+    // carry one must stay eager.
+    val counted = Observation(s"file_$fileLogId")
+    val flagged = Validate.withErrorColumn(layout.extract(cfg.dateFormat)
         .withColumn("source_file", lit(fileName))
         .withColumn("processed_at", current_timestamp())
-        .withColumn("status", lit("new"))
-        .localCheckpoint() // small per-file batch; avoids re-extraction per action
-
-    val split = Validate.split(extracted)
-    val valid = split.valid.localCheckpoint()
-    val errors = split.errors.localCheckpoint()
+        .withColumn("status", lit("new")))
+      .observe(counted, count(lit(1)).as("rows"), count(col("error")).as("errors"))
+      .localCheckpoint(eager = true)
+    val rowsTotal = counted.get("rows").asInstanceOf[Long]
+    val errorCount = counted.get("errors").asInstanceOf[Long]
+    val rowsValid = rowsTotal - errorCount
+    val Validate.Split(valid, errors) = Validate.splitFlagged(flagged)
     // NEVER collect the full error channel: one poison file with millions
-    // of bad rows would OOM the driver. Count distributed; pull only the
-    // first `errorCap` (+1 to detect truncation) for the report detail —
-    // orderBy+limit compiles to TakeOrderedAndProject (no full sort).
-    val errorCount = errors.count()
-    val errorSample = errors.orderBy(col("row_index")).limit(errorCap + 1).collect()
-    val rowsTotal = extracted.count()
-    val rowsValid = valid.count()
+    // of bad rows would OOM the driver. Pull only the first `errorCap`
+    // (+1 to detect truncation) for the report detail — orderBy+limit
+    // compiles to TakeOrderedAndProject (no full sort) — and only when
+    // there is an error at all.
+    val errorSample =
+      if (errorCount == 0) Array.empty[org.apache.spark.sql.Row]
+      else errors.orderBy(col("row_index")).limit(errorCap + 1).collect()
 
     // consolidated side: lenient re-parse (J5) — invalid legacy rows keep
     // living in the store but leave the probe set
@@ -298,75 +313,76 @@ object ConsolidationPipeline {
     // both merge sides must share the store's column set; extractor output
     // lacks passthrough fields (fecha_recepcion_digital, …) → null-fill,
     // keeping row_index for first-wins dedup + audit attribution
-    val present = valid.columns.toSet
-    val aligned = valid.select(store.schema.fields.map(f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)).toSeq :+ col("row_index"): _*)
+    val aligned = alignTo(store.schema, valid, col("row_index"))
 
-    val m = cfg.mergeMode match {
-      case "upsert" => Merge.fullUpsert(existing, aligned, InvoiceRecord.pk,
+    val upsert = cfg.mergeMode == "upsert"
+    val m =
+      if (upsert) Merge.fullUpsert(existing, aligned, InvoiceRecord.pk,
         InvoiceRecord.changeFields)
-      case _ => Merge.insertOnly(existing, aligned, InvoiceRecord.pk)
-    }
+      else Merge.insertOnly(existing, aligned, InvoiceRecord.pk)
 
-    // pin the merge result BEFORE any store mutation: the upsert path
-    // overwrites the very files m.result's lineage reads, so every
-    // downstream use (reconcile, audit, counters) works off this
-    // materialized copy
-    val mResult = m.result.localCheckpoint()
+    // upsert: pin the merge result BEFORE any store mutation — the
+    // overwrite replaces the very files m.result's lineage reads, so
+    // every downstream use works off this materialized copy, whose job
+    // also counts the inserted rows. Insert-only appends, so only the
+    // inserted slice materializes (counting itself) — the attribution,
+    // the append and the merged view that reconcile reads all go
+    // through it.
+    val insertedObs = Observation(s"inserted_$fileLogId")
+    def countNew(df: DataFrame) = df.observe(insertedObs,
+      count(when(col("status") === RecordStatus.New, lit(1))).as("n"))
+    val (mResult, inserted) =
+      if (upsert) {
+        val pinned = countNew(m.result).localCheckpoint(eager = true)
+        (pinned, pinned.filter(col("status") === RecordStatus.New))
+      } else {
+        val slice = countNew(m.inserted).localCheckpoint(eager = true)
+        (Merge.insertOnlyView(existing, slice), slice)
+      }
+    val insertedCount = insertedObs.get("n").asInstanceOf[Long]
 
     // A2 — reconcile BEFORE the sink commit; throws on loss/variance
-    Reconcile.check(valid, mResult, InvoiceRecord.pk, "total_amount")
-
-    val inserted = (cfg.mergeMode match {
-      case "upsert" => mResult.filter(col("status") === "new")
-      case _ => m.inserted
-    }).localCheckpoint()
-    val insertedCount = inserted.count()
+    val reconciled = Reconcile.check(valid, mResult, InvoiceRecord.pk, "total_amount")
 
     // J2 + S8 — record-level lineage: merge actions for valid rows,
     // VALIDATION_ERROR rows from the split side-channel. Insert-only
     // attribution comes from the inserted slice (the merged view labels
     // kept rows `new` too, which would misreport skipped duplicates as
-    // INSERT and contradict the file log's inserted count).
-    val attributed = (cfg.mergeMode match {
-      case "upsert" => Merge.attributeActions(valid, mResult, InvoiceRecord.pk)
-      case _ => Merge.attributeInsertOnly(valid, inserted, InvoiceRecord.pk)
-    }).localCheckpoint()
+    // INSERT and contradict the file log's inserted count). The
+    // updated/unchanged counters are observed on this very write, so they
+    // mirror the record_log actions by construction (the merged view's
+    // statuses would count store rows this file never touched).
+    val attributed =
+      if (upsert) Merge.attributeActions(valid, mResult, InvoiceRecord.pk)
+      else Merge.attributeInsertOnly(valid, inserted, InvoiceRecord.pk)
     val errDf = errors.select(col("row_index"), col("invoice_number"),
       lit(null).cast("string").as("reference_number"),
       lit(RecordAction.ValidationError).as("action"),
       col("error").as("error_message"))
+    val actions = Observation(s"actions_$fileLogId")
     tracker.logRecords(runId, fileLogId,
-      attributed.unionByName(errDf, allowMissingColumns = true))
-
-    // per-file counters mirror the record_log actions: in insert-only
-    // mode the merged-view statuses are all `new` (whole-store counts,
-    // not this file's), so count the attribution instead
-    val counters: Map[String, Long] = cfg.mergeMode match {
-      case "upsert" => mResult.groupBy("status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      case _ => Map("unchanged" -> attributed
-        .filter(col("action") === RecordAction.Unchanged).count())
-    }
-    val srcTotal = Reconcile.decimalTotal(valid, "total_amount")
+      attributed.unionByName(errDf, allowMissingColumns = true)
+        .observe(actions,
+          count(when(col("action") === RecordAction.Update, lit(1))).as("updated"),
+          count(when(col("action") === RecordAction.Unchanged, lit(1))).as("unchanged")))
+    val updatedCount = actions.get("updated").asInstanceOf[Long]
+    val unchangedCount = actions.get("unchanged").asInstanceOf[Long]
 
     // S7 semantics — the store mutation happens LAST: append only the
     // inserted slice (insert-only) or overwrite with the merged view
-    // (upsert; safe because mResult/inserted are already materialized)
+    // (upsert; safe because mResult is already materialized)
     def partitioned(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) =
       if (cfg.partitionBy.nonEmpty) w.partitionBy(cfg.partitionBy: _*) else w
     try {
       cfg.beforeStoreWrite(fileName)
-      cfg.mergeMode match {
-        case "upsert" =>
-          partitioned(mResult.write.mode(SaveMode.Overwrite))
-            .parquet(cfg.consolidatedPath)
-        case _ =>
-          partitioned(alignToStore(spark, inserted, cfg.consolidatedPath)
-            .write.mode(SaveMode.Append))
-            .parquet(cfg.consolidatedPath)
-      }
+      if (upsert)
+        partitioned(mResult.write.mode(SaveMode.Overwrite))
+          .parquet(cfg.consolidatedPath)
+      else
+        // align to the store's column set (missing cols → null) so unions
+        // across runs stay schema-stable
+        partitioned(alignTo(store.schema, inserted).write.mode(SaveMode.Append))
+          .parquet(cfg.consolidatedPath)
     } catch {
       case NonFatal(e) =>
         // a failed Overwrite can leave the store truncated/corrupt — roll
@@ -385,9 +401,9 @@ object ConsolidationPipeline {
     Report.FileOutcome(fileName, "COMPLETED", rowsTotal, rowsValid,
       errorCount,
       inserted = insertedCount,
-      updated = counters.getOrElse("updated", 0L),
-      unchanged = counters.getOrElse("unchanged", 0L),
-      sourceTotal = BigDecimal(srcTotal),
+      updated = updatedCount,
+      unchanged = unchangedCount,
+      sourceTotal = BigDecimal(reconciled.sourceTotal),
       errorDetail = Report.cappedErrorsTotal(
         errorSample.take(errorCap).toSeq.map(r =>
           s"$fileName fila ${r.getAs[Any]("row_index")}: ${r.getAs[String]("error")}"),
@@ -405,17 +421,15 @@ object ConsolidationPipeline {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         InvoiceRecord.schema)
 
-  /** Align the inserted slice to the store's column set (missing cols →
-    * null) so unions across runs stay schema-stable.
+  /** Project `df` onto the store's column set: present columns cast to
+    * the store's type, missing ones null-filled with that type; `extra`
+    * columns ride along after them.
     */
-  private def alignToStore(spark: SparkSession, inserted: DataFrame,
-      path: String): DataFrame = {
-    val storeSchema =
-      if (Files.exists(Paths.get(path))) spark.read.parquet(path).schema
-      else InvoiceRecord.schema
-    val present = inserted.columns.toSet
-    inserted.select(storeSchema.fields.map(f =>
+  private def alignTo(storeSchema: StructType, df: DataFrame,
+      extra: Column*): DataFrame = {
+    val present = df.columns.toSet
+    df.select(storeSchema.fields.map(f =>
       if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
+      else lit(null).cast(f.dataType).as(f.name)).toSeq ++ extra: _*)
   }
 }

@@ -46,12 +46,14 @@ object OfficialFormatExtract {
   def mixedFormat(detail: DataFrame, fc: StagedWorkbook.FixedCells,
       dateFormat: String = "dd-MM-yyyy"): DataFrame = {
     val allCols = detail.columns.filterNot(_ == "row_index").toSeq
-    // P2: fully-empty rows; P3: blank reference; P4: NETO/IVA/TOTAL rows
-    val filtered = Canonicalize.dropSummaryRows(
-      Canonicalize.requireNonBlank(
-        Canonicalize.dropFullyEmpty(detail, allCols),
-        "Órdenes de Embarque"),
-      allCols)
+    // P2: fully-empty rows; P3: blank reference; P4: NETO/IVA/TOTAL rows —
+    // ONE filter. Chained, the three filters over the aliased detail
+    // columns make Catalyst's constraint propagation grow exponentially
+    // with the column count (the reference's 27-column layout exhausted a
+    // 3 GB heap while optimizing); fused, it plans in milliseconds.
+    val filtered = detail.filter(Canonicalize.anyNonNull(allCols) &&
+      Canonicalize.nonBlank("Órdenes de Embarque") &&
+      Canonicalize.notSummaryRow(allCols))
     val total = row_total_override(
       parse_clp_money(cOpt(filtered, "Total Servicio ($)")),
       MixedMoneyComponents.map(c => parse_clp_money(cOpt(filtered, c))))
@@ -112,19 +114,37 @@ object OfficialFormatExtract {
       lit(null).cast("string").as("aprobado_por"))
   }
 
-  /** Full per-file extraction: fixed cells → format detect → header
-    * discovery → the matching path. Mirrors `extract()` :91-125.
+  /** A staged sheet's detected layout: its fixed cells, the format they
+    * select and the detail table under the discovered header row.
     */
-  def extract(sheet: DataFrame, dateFormat: String = "dd-MM-yyyy"): DataFrame = {
-    val fc = StagedWorkbook.fixedCells(sheet)
-    if (StagedWorkbook.isMixedFormat(fc)) {
-      val headerRow = StagedWorkbook.discoverHeaderRow(
-        sheet, "Órdenes de Embarque", MixedKnownHeaders)
-      mixedFormat(StagedWorkbook.table(sheet, headerRow), fc, dateFormat)
-    } else {
-      val headerRow = StagedWorkbook.discoverHeaderRow(
-        sheet, "N° Factura", SimpleColumns.toSet)
-      simpleTabular(StagedWorkbook.table(sheet, headerRow), dateFormat)
-    }
+  final case class Layout(fc: StagedWorkbook.FixedCells, mixed: Boolean,
+      detail: DataFrame) {
+    /** Columns the schema pre-flight demands of this format. */
+    def required: Seq[String] =
+      if (mixed) Seq("Órdenes de Embarque")
+      else Seq("N° Factura", "N° Referencia", "Transportista", "Monto Total")
+
+    /** The matching extraction path. */
+    def extract(dateFormat: String = "dd-MM-yyyy"): DataFrame =
+      if (mixed) mixedFormat(detail, fc, dateFormat)
+      else simpleTabular(detail, dateFormat)
   }
+
+  /** Fixed cells → format detect → header discovery, all from the sheet's
+    * driver-side head (no Spark job). Mirrors `extract()` :91-125.
+    */
+  def layout(sheet: DataFrame, head: StagedWorkbook.Head): Layout = {
+    val fc = StagedWorkbook.fixedCells(head)
+    val mixed = StagedWorkbook.isMixedFormat(fc)
+    val headerRow =
+      if (mixed) StagedWorkbook.discoverHeaderRow(head, "Órdenes de Embarque",
+        MixedKnownHeaders)
+      else StagedWorkbook.discoverHeaderRow(head, "N° Factura",
+        SimpleColumns.toSet)
+    Layout(fc, mixed, StagedWorkbook.table(sheet, head, headerRow))
+  }
+
+  /** Full per-file extraction over a staged sheet (one head read). */
+  def extract(sheet: DataFrame, dateFormat: String = "dd-MM-yyyy"): DataFrame =
+    layout(sheet, StagedWorkbook.readHead(sheet)).extract(dateFormat)
 }

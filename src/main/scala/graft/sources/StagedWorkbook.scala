@@ -77,19 +77,52 @@ object StagedWorkbook {
   def colIndex(letters: String): Int =
     letters.toUpperCase.foldLeft(0)((acc, c) => acc * 26 + (c - 'A' + 1))
 
-  /** S5 — read one fixed cell by Excel address ("C8"): value of column C at
-    * physical row 8, null when blank/absent. Driver-side action (one tiny
-    * lookup per file, as in the reference).
+  /** The first [[HeadRows]] physical rows of a sheet, held on the driver:
+    * everything the per-file decisions read — the six fixed cells (rows
+    * 3-8), header discovery (rows ≤ 15, default 11) and the header names.
+    * One tiny read per file instead of one job per lookup. A row or cell
+    * beyond what the sheet holds reads as absent, never as an error, so a
+    * sheet narrower than column H is not a failure.
     */
-  def fixedCell(sheet: DataFrame, address: String): Option[String] = {
-    val (letters, digits) = address.partition(_.isLetter)
-    val rowNum = digits.toInt
-    val cIdx = colIndex(letters)
-    sheet.filter(col("_row_num") === rowNum)
-      .select(element_at(col("cells"), cIdx))
-      .collect().headOption.flatMap(r => Option(r.getString(0)))
-      .map(_.trim).filter(_.nonEmpty)
+  final case class Head(depth: Int, rows: Map[Int, IndexedSeq[String]]) {
+    /** Cells of physical row `n` (empty when the sheet has no such row). */
+    def row(n: Int): IndexedSeq[String] = {
+      require(n <= depth, s"row $n lies below the $depth rows read")
+      rows.getOrElse(n, IndexedSeq.empty)
+    }
+    /** Cell at 1-indexed (row, column); None when absent or null. */
+    def cell(n: Int, column: Int): Option[String] =
+      row(n).lift(column - 1).flatMap(Option(_))
   }
+
+  object Head {
+    /** Head of a sheet whose rows are already on the driver (XLSX ingress):
+      * no Spark job. `rows(0)` is physical row 1.
+      */
+    def of(rows: Seq[Seq[String]]): Head =
+      Head(HeadRows, rows.take(HeadRows).zipWithIndex
+        .map { case (cells, i) => (i + 1) -> cells.toIndexedSeq }.toMap)
+  }
+
+  /** Rows read by [[readHead]]: header discovery scans 15 rows. */
+  val HeadRows = 15
+
+  /** One collect of the rows `_row_num ≤ depth` of a staged sheet. */
+  def readHead(sheet: DataFrame, depth: Int = HeadRows): Head =
+    Head(depth, sheet.filter(col("_row_num") <= depth).collect()
+      .map(r => r.getInt(0) -> r.getSeq[String](1).toIndexedSeq).toMap)
+
+  /** S5 — one fixed cell by Excel address ("C8"): value of column C at
+    * physical row 8, None when blank or absent.
+    */
+  def fixedCell(head: Head, address: String): Option[String] = {
+    val (letters, digits) = address.partition(_.isLetter)
+    head.cell(digits.toInt, colIndex(letters)).map(_.trim).filter(_.nonEmpty)
+  }
+
+  /** [[fixedCell]] over a staged sheet (one collect). */
+  def fixedCell(sheet: DataFrame, address: String): Option[String] =
+    fixedCell(readHead(sheet, address.filter(_.isDigit).toInt), address)
 
   final case class FixedCells(
       empresaTransporte: Option[String], fechaEmision: Option[String],
@@ -99,13 +132,16 @@ object StagedWorkbook {
   /** S5 — the reference's six header cells (C6, G3, C8, H6, H7, F4 —
     * official_format_extractor.py:77-84, :455-476).
     */
-  def fixedCells(sheet: DataFrame): FixedCells = FixedCells(
-    empresaTransporte = fixedCell(sheet, "C6"),
-    fechaEmision = fixedCell(sheet, "G3"),
-    numeroFactura = fixedCell(sheet, "C8"),
-    nave = fixedCell(sheet, "H6"),
-    puertoEmbarque = fixedCell(sheet, "H7"),
-    responsable = fixedCell(sheet, "F4"))
+  def fixedCells(head: Head): FixedCells = FixedCells(
+    empresaTransporte = fixedCell(head, "C6"),
+    fechaEmision = fixedCell(head, "G3"),
+    numeroFactura = fixedCell(head, "C8"),
+    nave = fixedCell(head, "H6"),
+    puertoEmbarque = fixedCell(head, "H7"),
+    responsable = fixedCell(head, "F4"))
+
+  /** [[fixedCells]] over a staged sheet (one collect). */
+  def fixedCells(sheet: DataFrame): FixedCells = fixedCells(readHead(sheet))
 
   /** Format auto-detect (official_format_extractor.py:111-121): mixed when
     * both C8 (invoice number) and C6 (carrier) are populated, else simple
@@ -117,39 +153,49 @@ object StagedWorkbook {
   /** S4 — header-row discovery: scan the first `maxScan` physical rows for
     * one containing `marker` or ≥ `minKnown` of `knownHeaders`; fall back
     * to `defaultRow` (official_format_extractor.py:376-396: marker
-    * "Órdenes de Embarque", default row 11). Driver-side scan of ≤15 rows.
+    * "Órdenes de Embarque", default row 11).
+    */
+  def discoverHeaderRow(head: Head, marker: String,
+      knownHeaders: Set[String], maxScan: Int, minKnown: Int,
+      defaultRow: Int): Int =
+    (1 to maxScan).find { n =>
+      val cells = head.row(n).filter(_ != null).map(_.trim)
+      cells.contains(marker) || cells.count(knownHeaders.contains) >= minKnown
+    }.getOrElse(defaultRow)
+
+  def discoverHeaderRow(head: Head, marker: String,
+      knownHeaders: Set[String]): Int =
+    discoverHeaderRow(head, marker, knownHeaders, HeadRows, 3, 11)
+
+  /** [[discoverHeaderRow]] over a staged sheet (one collect of ≤ `maxScan`
+    * rows).
     */
   def discoverHeaderRow(sheet: DataFrame, marker: String,
-      knownHeaders: Set[String], maxScan: Int = 15, minKnown: Int = 3,
-      defaultRow: Int = 11): Int = {
-    val head = sheet.filter(col("_row_num") <= maxScan)
-      .orderBy("_row_num").collect()
-    head.collectFirst {
-      case r if {
-        val cells = r.getSeq[String](1).filter(_ != null).map(_.trim)
-        cells.contains(marker) || cells.count(knownHeaders.contains) >= minKnown
-      } => r.getInt(0)
-    }.getOrElse(defaultRow)
-  }
+      knownHeaders: Set[String], maxScan: Int = HeadRows, minKnown: Int = 3,
+      defaultRow: Int = 11): Int =
+    discoverHeaderRow(readHead(sheet, maxScan), marker, knownHeaders,
+      maxScan, minKnown, defaultRow)
 
   /** Project the staged sheet into a named-column table: headers from
-    * physical row `headerRow`, data from `headerRow + 1` on. Blank/null
-    * header cells are dropped; duplicate headers keep the first column.
-    * `_row_num` is carried (order-dependent operators need it).
+    * physical row `headerRow` of `head`, data from `headerRow + 1` on.
+    * Blank/null header cells are dropped; duplicate headers keep the first
+    * column; a row shorter than the header row reads null for the missing
+    * cells. `_row_num` is carried (order-dependent operators need it).
     */
-  def table(sheet: DataFrame, headerRow: Int): DataFrame = {
-    val headers = sheet.filter(col("_row_num") === headerRow)
-      .select("cells").collect().headOption
-      .map(_.getSeq[String](0)).getOrElse(Seq.empty)
-    val named = headers.zipWithIndex
+  def table(sheet: DataFrame, head: Head, headerRow: Int): DataFrame = {
+    val named = head.row(headerRow).zipWithIndex
       .collect { case (h, i) if h != null && h.trim.nonEmpty => (h.trim, i) }
       .groupBy(_._1).map { case (h, xs) => (h, xs.head._2) }.toSeq
       .sortBy(_._2)
     sheet.filter(col("_row_num") > headerRow)
       .select(col("_row_num").as("row_index") +:
         named.map { case (h, i) =>
-          element_at(col("cells"), i + 1).as(h) }: _*)
+          try_element_at(col("cells"), lit(i + 1)).as(h) }: _*)
   }
+
+  /** [[table]] with the header row read from the sheet (one collect). */
+  def table(sheet: DataFrame, headerRow: Int): DataFrame =
+    table(sheet, readHead(sheet, headerRow), headerRow)
 
   /** Schema pre-flight (excel_handler.py:168-183): actual vs expected
     * column sets → (isValid, missing, extra).

@@ -81,6 +81,23 @@ class MergeSpec extends SparkSpec {
     }
   }
 
+  test("A2 reconcile report is exact when either side repeats a key") {
+    def amounts(rows: (String, String, Option[Int])*) =
+      rows.toDF("invoice_number", "reference_number", "total_amount")
+    val source = amounts(("1", "A", Some(100)), ("1", "A", Some(5)),
+      ("2", "B", Some(50)), ("3", "C", None), (null, "D", Some(9)))
+    // key 1 twice, key 2 once, key 3 absent, plus rows of no source key
+    // and one whose null field can never match
+    val result = amounts(("1", "A", Some(100)), ("1", "A", Some(100)),
+      ("2", "B", Some(50)), ("4", "E", Some(7)), (null, "D", Some(9)))
+    val rep = intercept[Reconcile.ReconciliationException](
+      Reconcile.check(source, result, pk, "total_amount")).report
+    // 4 distinct source keys; 3 and the null-keyed one are missing
+    assert(rep.sourcePks == 4 && rep.missingPks == 2)
+    assert(rep.sourceTotal.compareTo(new java.math.BigDecimal(164)) == 0)
+    assert(rep.resultTotal.compareTo(new java.math.BigDecimal(250)) == 0)
+  }
+
   test("A5 roll-up") {
     assert(Reconcile.rollUp(0, 0) == "NO_FILES")
     assert(Reconcile.rollUp(3, 0) == "SUCCESS")

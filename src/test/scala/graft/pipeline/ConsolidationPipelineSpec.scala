@@ -172,6 +172,186 @@ class ConsolidationPipelineSpec extends SparkSpec {
     assert(!tracker.isFileProcessed("a.csv", t2), "modified file must reprocess")
   }
 
+  test("batched J4 probe answers exactly as the per-file probe") {
+    // the per-file query the probe ran before it was batched: one filter
+    // on (name, mtime), latest started_at per status, same driver rule
+    val base = tmp()
+    val tracker = new Audit.Tracker(spark, cfg(base).auditDir)
+    def perFile(name: String, mtime: java.sql.Timestamp): Boolean = {
+      val byTime = tracker.files.filter(col("file_name") === name &&
+          col("file_modified_time") === mtime)
+        .groupBy(col("status")).agg(max(col("started_at")))
+        .collect().map(r => r.getString(0) -> r.getTimestamp(1)).toMap
+      byTime.get("COMPLETED").exists(done =>
+        !byTime.get("ROLLED_BACK").exists(rb => !rb.before(done)))
+    }
+    val t1 = new java.sql.Timestamp(1700000000000L)
+    val t2 = new java.sql.Timestamp(1700000060000L)
+    def at(s: Long) = new java.sql.Timestamp(1700000000000L + s * 1000)
+    def log(name: String, mtime: java.sql.Timestamp, status: String,
+        started: java.sql.Timestamp): Unit =
+      tracker.logFile(Audit.FileLog("run-x", java.util.UUID.randomUUID().toString,
+        name, mtime, schema_valid = true, Nil, Nil, 1, 1, 0, status,
+        started, Some(started)))
+    val listing = Seq("unknown.csv" -> t1, "errored.csv" -> t1,
+      "done.csv" -> t1, "done.csv" -> t2, "rolled.csv" -> t1,
+      "redone.csv" -> t1, "tie.csv" -> t1, "error-after.csv" -> t1)
+    // no audit table yet: nothing is processed
+    assert(tracker.processedFiles(listing).isEmpty)
+    log("errored.csv", t1, "ERROR", at(1))
+    log("done.csv", t1, "COMPLETED", at(1))
+    log("rolled.csv", t1, "COMPLETED", at(1))
+    log("rolled.csv", t1, "ROLLED_BACK", at(2))
+    log("redone.csv", t1, "COMPLETED", at(1))
+    log("redone.csv", t1, "ROLLED_BACK", at(2))
+    log("redone.csv", t1, "COMPLETED", at(3))
+    log("tie.csv", t1, "COMPLETED", at(1))
+    log("tie.csv", t1, "ROLLED_BACK", at(1))
+    log("error-after.csv", t1, "COMPLETED", at(1))
+    log("error-after.csv", t1, "ERROR", at(2))
+    val batched = tracker.processedFiles(listing)
+    assert(batched == listing.filter { case (n, t) => perFile(n, t) }.toSet)
+    assert(batched == Set("done.csv" -> t1, "redone.csv" -> t1,
+      "error-after.csv" -> t1))
+    listing.foreach { case (n, t) =>
+      assert(tracker.isFileProcessed(n, t) == batched.contains(n -> t), s"$n@$t")
+    }
+  }
+
+  /** Runs `body` and returns the Spark jobs it started, one
+    * (SQL execution id, SQL call site) pair per job — (-1, "") for a job
+    * outside SQL. Jobs of other threads are ignored.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[(Long, String)]) = {
+    val tag = s"spec-${java.util.UUID.randomUUID()}"
+    val sc = spark.sparkContext
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val jobSites = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) {
+          jobs.add(e.jobId)
+          Option(e.properties.getProperty("spark.sql.execution.id"))
+            .map(_.toLong).foreach(id =>
+              jobSites.put(e.jobId, id -> Option(sqlSites.get(id)).getOrElse("")))
+        }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            sqlSites.put(x.executionId, x.description)
+          case _ =>
+        }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.asScala.toSeq.sorted.map(j =>
+        Option(jobSites.get(j)).getOrElse((-1L, ""))))
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("job budget: a run spends at most 24 Spark jobs per processed file") {
+    // small files cost job dispatch, not data: the head is one read, the
+    // extraction one checkpoint with observed counters, the J4 probe one
+    // query per run. One job per lookup and per counter cost 97 jobs on
+    // this folder (48.5 per file); one plan per phase costs 34.
+    val base = tmp()
+    writeSimpleWorkbook(s"$base/landing", "a.csv", Seq(r1, r2))
+    val bad = Seq("FAC-009", "REF-009", "Carrier", "INVALID-DATE",
+      "x", "100", "0", "100", "CLP")
+    writeSimpleWorkbook(s"$base/landing", "b.csv", Seq(r3, bad))
+    val (report, jobs) = jobsOf(ConsolidationPipeline.run(spark, cfg(base)))
+    assert(report.status == "SUCCESS" && report.files.size == 2, report.toString)
+    assert(jobs.nonEmpty)
+    assert(jobs.size <= 24 * 2, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
+  test("a workbook with headers and no data rows completes with zero counters") {
+    // every observed counter must still report when its job sees no rows
+    for (mode <- Seq("insert-only", "upsert")) {
+      val base = tmp()
+      val c = cfg(base).copy(mergeMode = mode)
+      writeSimpleWorkbook(s"$base/landing", "seed.csv", Seq(r1))
+      assert(ConsolidationPipeline.run(spark, c).status == "SUCCESS")
+      writeSimpleWorkbook(s"$base/landing", "empty.csv", Nil)
+      val rep = ConsolidationPipeline.run(spark, c)
+      assert(rep.status == "SUCCESS", s"$mode: $rep")
+      val o = rep.files.head
+      assert(o.status == "COMPLETED" && o.rowsTotal == 0 && o.inserted == 0 &&
+        o.updated == 0 && o.unchanged == 0 && o.sourceTotal == BigDecimal(0), s"$mode: $o")
+    }
+  }
+
+  test("counters equal the record_log actions in both merge modes") {
+    for (mode <- Seq("insert-only", "upsert")) {
+      val base = tmp()
+      val c = cfg(base).copy(mergeMode = mode)
+      // seed: r3 stays a store row no later file touches
+      writeSimpleWorkbook(s"$base/landing", "seed.csv", Seq(r1, r3))
+      assert(ConsolidationPipeline.run(spark, c).status == "SUCCESS")
+      // no errors (the error sample must not run); more than errorCap
+      // errors (truncation tail); a redelivered PK with a changed carrier
+      // (UPDATE in upsert mode, UNCHANGED in insert-only)
+      val f4 = Seq("FAC-004", "REF-004", "Carrier Norte", "18-01-2026",
+        "x", "1000", "190", "1190", "CLP")
+      writeSimpleWorkbook(s"$base/landing", "clean.csv", Seq(r2, f4))
+      val bad = (1 to ConsolidationPipeline.errorCap + 3).map(i => Seq(
+        s"FAC-B$i", s"REF-B$i", "Carrier X", "NO-ES-FECHA", "x", "1000", "190",
+        "1190", "CLP"))
+      val f5 = Seq("FAC-005", "REF-005", "Carrier Sur", "19-01-2026",
+        "x", "2000", "380", "2380", "CLP")
+      writeSimpleWorkbook(s"$base/landing", "errors.csv", f5 +: bad)
+      val r1Carrier = r1.updated(2, "Transportes Nuevos SpA")
+      writeSimpleWorkbook(s"$base/landing", "update.csv", Seq(r1Carrier))
+
+      val (rep, jobs) = jobsOf(ConsolidationPipeline.run(spark, c))
+      assert(rep.status == "SUCCESS", s"$mode: $rep")
+      assert(rep.files.map(_.fileName).toSet ==
+        Set("clean.csv", "errors.csv", "update.csv"), mode)
+      val tracker = new Audit.Tracker(spark, c.auditDir)
+      val logs = tracker.files.filter(col("run_uuid") === rep.runUuid).collect()
+      val actions = tracker.records.filter(col("run_uuid") === rep.runUuid)
+        .groupBy("file_log_id", "action").count().collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      rep.files.foreach { o =>
+        val log = logs.find(_.getAs[String]("file_name") == o.fileName).get
+        val id = log.getAs[String]("file_log_id")
+        def n(a: String) = actions.getOrElse((id, a), 0L)
+        val ctx = s"$mode ${o.fileName}: $o vs ${actions.filter(_._1._1 == id)}"
+        assert(log.getAs[Long]("rows_total") == o.rowsTotal, ctx)
+        assert(log.getAs[Long]("rows_valid") == o.rowsValid, ctx)
+        assert(log.getAs[Long]("rows_error") == o.rowsError, ctx)
+        assert(o.rowsTotal == n("INSERT") + n("UPDATE") + n("UNCHANGED") +
+          n("VALIDATION_ERROR"), ctx)
+        assert(o.rowsValid == n("INSERT") + n("UPDATE") + n("UNCHANGED"), ctx)
+        assert(o.rowsError == n("VALIDATION_ERROR"), ctx)
+        assert(o.inserted == n("INSERT"), ctx)
+        assert(o.updated == n("UPDATE"), ctx)
+        assert(o.unchanged == n("UNCHANGED"), ctx)
+      }
+      val byName = rep.files.map(o => o.fileName -> o).toMap
+      assert(byName("clean.csv").inserted == 2 && byName("clean.csv").rowsError == 0)
+      assert(byName("errors.csv").rowsError == ConsolidationPipeline.errorCap + 3)
+      assert(byName("errors.csv").errorDetail.last == "... y 3 más")
+      val upd = byName("update.csv")
+      if (mode == "upsert") assert(upd.updated == 1 && upd.unchanged == 0, upd.toString)
+      else assert(upd.updated == 0 && upd.unchanged == 1, upd.toString)
+      // the error sample is the pipeline's only collect: it ran for the
+      // one file with errors and was skipped for the other two
+      val samples = jobs.filter(_._2.startsWith("collect at ConsolidationPipeline"))
+        .map(_._1).distinct
+      assert(samples.size == 1, s"$mode: ${jobs.mkString("\n")}")
+    }
+  }
+
   test("idempotence: re-running the same file (same mtime) is a no-op") {
     val base = tmp()
     val f = writeSimpleWorkbook(s"$base/landing", "f1.csv", Seq(r1))

@@ -29,6 +29,34 @@ class StagedWorkbookSpec extends SparkSpec {
     assert(StagedWorkbook.fixedCell(s, "A9").isEmpty)           // beyond rows
   }
 
+  test("narrow and ragged sheets: absent cells read as None/null, never throw") {
+    // 4 cells per row: G3/H6/H7 lie beyond the row (ANSI element_at would
+    // throw INVALID_ARRAY_INDEX_IN_ELEMENT_AT on them)
+    val narrow = sheet((1 to 12).map(_ => Seq("", "", "x", "")): _*)
+    val fc = StagedWorkbook.fixedCells(narrow)
+    assert(fc.fechaEmision.isEmpty && fc.nave.isEmpty && fc.puertoEmbarque.isEmpty)
+    assert(fc.empresaTransporte.contains("x") && fc.numeroFactura.contains("x"))
+    assert(StagedWorkbook.fixedCell(narrow, "H7").isEmpty)
+    // a data row shorter than the header row: the missing cells are null
+    val ragged = sheet(Seq("A", "B", "C"), Seq("1"), Seq("2", "3", "4"))
+    val rows = StagedWorkbook.table(ragged, 1).orderBy("row_index").collect()
+    assert(rows.map(r => (r.getString(1), r.getString(2), r.getString(3))).toSeq ==
+      Seq(("1", null, null), ("2", "3", "4")))
+  }
+
+  test("head: one read answers fixed cells, header discovery and headers") {
+    val rows = (1 to 20).map(i => Seq(s"r$i", if (i == 13) "N° Factura" else ""))
+    val head = StagedWorkbook.readHead(sheet(rows: _*))
+    assert(head.rows.keySet == (1 to StagedWorkbook.HeadRows).toSet)
+    assert(head == StagedWorkbook.Head.of(rows))
+    assert(StagedWorkbook.fixedCell(head, "A3").contains("r3"))
+    assert(StagedWorkbook.fixedCell(head, "C3").isEmpty)
+    assert(StagedWorkbook.discoverHeaderRow(head, "N° Factura", Set.empty) == 13)
+    assert(StagedWorkbook.discoverHeaderRow(head, "NOPE", Set.empty) == 11)
+    // a lookup below the rows read is a caller error, not a silent None
+    intercept[IllegalArgumentException](head.row(StagedWorkbook.HeadRows + 1))
+  }
+
   test("header discovery: marker wins, else >=3 known headers, else default") {
     val withMarker = sheet(
       Seq("junk", ""),

@@ -165,6 +165,30 @@ class XlsxSpec extends SparkSpec {
       === "FAC-001").count() == 1)
   }
 
+  test("a 4-column xlsx (only the required columns) completes end-to-end") {
+    // narrower than column H: the fixed-cell lookups of G3/H6/H7 must read
+    // as absent instead of failing the file
+    val base = Files.createTempDirectory("graft-xlsx-narrow")
+    val landing = Files.createDirectories(java.nio.file.Paths.get(s"$base/landing"))
+    val required = Seq("N° Factura", "N° Referencia", "Transportista", "Monto Total")
+    val body = Seq(Seq("FAC-401", "REF-401", "Carrier Uno", "119000"),
+      Seq("FAC-402", "REF-402", "Carrier Dos", "238000"))
+    XlsxEgress.write(s"$landing/angosta.xlsx",
+      (Seq.fill(10)(Seq.fill(4)("")) ++ Seq(required) ++ body).map(_.map(c => c: Any)))
+    assert(XlsxIngress.readRows(s"$landing/angosta.xlsx").forall(_.size == 4))
+    val report = graft.pipeline.ConsolidationPipeline.run(spark,
+      graft.pipeline.ConsolidationPipeline.Config(
+        landingDir = s"$base/landing",
+        consolidatedPath = s"$base/consolidado.parquet",
+        auditDir = s"$base/audit",
+        lifecycleDir = s"$base/lifecycle"))
+    val file = report.files.head
+    assert(file.status == "COMPLETED", report.toString)
+    // no `Fecha Factura` column: every row is a date validation error
+    assert(file.rowsTotal == 2 && file.rowsError == 2, file.toString)
+    assert(file.errorDetail.forall(_.contains("Formato de fecha")), file.toString)
+  }
+
   test("in-place append preserves images/drawings and copies last-row styles") {
     val xlsx = tmpFile(".xlsx")
     val zos = new ZipOutputStream(java.nio.file.Files.newOutputStream(
